@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: String cells with these exact values are standardized to NULL.
@@ -213,11 +213,6 @@ def latest_per_key(
 
     order = [F.col(ts_col).desc()] + [F.col(t).desc() for t in tiebreakers]
     return distinct_on(df, list(keys), order)
-
-
-def null_safe_div(num: Column, den: Column) -> Column:
-    """x / NULLIF(y, 0) — the ingestion-safe division."""
-    return num / F.nullif(den, F.lit(0))
 
 
 def flatten_structs(df: DataFrame, sep: str = "_") -> DataFrame:
