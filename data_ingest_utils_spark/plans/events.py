@@ -657,11 +657,12 @@ def evt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     try:
-        # 8 state stores, not the batch default 32: the join buffers
-        # ~1 M rows at sf1 — per-store snapshot/commit overhead, not
-        # row volume, dominates the one-batch drain (14.5 s → 6.25 s
-        # measured; see state_partitions_scope).  Since round 11 this
-        # is run_available_now's default (state_partitions=8).
+        # One state store per task slot (at most 8), not the batch
+        # default 32: the join buffers ~1 M rows at sf1 — per-store
+        # snapshot/commit overhead, not row volume, dominates the
+        # one-batch drain (14.5 s → 6.25 s at 8 stores on 8 slots;
+        # see state_partitions_scope).  This is run_available_now's
+        # default, min(8, defaultParallelism).
         # no_data_batches=False (round 17): inner-join matches emit in
         # the data batch itself, so the trailing empty micro-batch
         # (watermark-flush machinery for append-mode windowed aggs)
@@ -908,12 +909,12 @@ def evt_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             # r13: the torn check above is stale after the 4-batch
             # staging — a concurrent invocation may have promoted).
             _promote_cache_build(build, src)
-        # 8 state stores for a 4-micro-batch drain whose windowed
-        # state is tiny: at the batch default 32 the per-store
-        # snapshot/commit fixed cost is paid 128 times (see
-        # state_partitions_scope); metric SUMS are store-count
-        # invariant.  Since round 11 the 8-store scope is
-        # run_available_now's default (state_partitions=8).
+        # One state store per task slot (at most 8) for a
+        # 4-micro-batch drain whose windowed state is tiny: at the
+        # batch default 32 the per-store snapshot/commit fixed cost
+        # is paid 128 times (see state_partitions_scope); metric SUMS
+        # are store-count invariant.  This is run_available_now's
+        # default, min(8, defaultParallelism).
         progress = run_available_now(
             watermarked_tumbling(
                 read_parquet_stream(spark, src),

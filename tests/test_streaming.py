@@ -10,6 +10,7 @@ exercised across genuinely separate micro-batches.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -696,6 +697,86 @@ def test_stateful_counter_correct_across_arrow_chunks(spark, tmp_path):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
+def _cumcount_reference(chunks: list, n: int, user_key) -> tuple:
+    """The counter's former pandas kernel, kept verbatim as the
+    reference: concat every chunk, ``sort_values`` on the datetime
+    ``ts`` (NaT last) and ``event_id``, then number the rows."""
+    import numpy as np
+
+    if not chunks:
+        return pd.DataFrame(columns=["user_id", "event_id", "n_so_far"]), n
+    pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+    out = pd.DataFrame(
+        {
+            "user_id": np.full(len(pdf), user_key, dtype="int64"),
+            "event_id": pdf["event_id"].astype("int64").to_numpy(),
+            "n_so_far": n + np.arange(1, len(pdf) + 1, dtype="int64"),
+        }
+    )
+    return out, n + len(pdf)
+
+
+def test_cumcount_kernel_matches_pandas_reference():
+    """The numpy counter kernel must number every group exactly as the
+    former pandas kernel did.  Each random group arrives as Arrow would
+    hand it over: ``ts`` as epoch microseconds for the kernel (int64,
+    or float64 with NaN in a chunk holding a NULL) and as a tz-aware
+    datetime (NaT for NULL) for the reference.  Groups have ``ts`` ties
+    broken by ``event_id``, NULL ``ts`` (sorted last), several chunks
+    in reverse order, and an empty chunk list.  No Spark needed."""
+    import numpy as np
+
+    from data_ingest_utils_spark.streaming.stateful import _cumcount_batch
+
+    def chunk_pair(event_id, micros, null):
+        ids = pa.array(event_id, type=pa.int64()).to_pandas()
+        us = pa.array(micros, type=pa.int64(), mask=null)
+        dt = us.cast(pa.timestamp("us", tz="UTC"))
+        return (
+            pd.DataFrame({"user_id": 7, "event_id": ids, "ts": us.to_pandas()}),
+            pd.DataFrame({"user_id": 7, "event_id": ids, "ts": dt.to_pandas()}),
+        )
+
+    rng = np.random.default_rng(0)
+    base = 1_704_103_200_000_000  # 2024-01-01 10:00 UTC in µs
+    saw_null = saw_multi = False
+    for trial in range(300):
+        m = int(rng.integers(1, 40))
+        event_id = rng.permutation(10 * m)[:m]
+        micros = base + rng.integers(0, max(1, m // 3), m) * 60_000_000  # ties
+        null = rng.random(m) < (0.2 if trial % 3 == 0 else 0.0)
+        n_cuts = min(m - 1, int(rng.integers(0, 4)))
+        cuts = sorted(rng.choice(np.arange(1, m), n_cuts, replace=False))
+        pieces = [
+            chunk_pair(event_id[a:b], micros[a:b], null[a:b])
+            for a, b in zip([0, *cuts], [*cuts, m])
+        ]
+        if trial % 2:
+            pieces.reverse()
+        saw_null |= bool(null.any())
+        saw_multi |= len(pieces) > 1
+        n = int(rng.integers(0, 100))
+        got, got_n = _cumcount_batch([p[0] for p in pieces], n, 7)
+        want, want_n = _cumcount_reference([p[1] for p in pieces], n, 7)
+        pd.testing.assert_frame_equal(got, want)
+        assert got_n == want_n == n + m
+    assert saw_null and saw_multi
+
+    # the NULL ts sorts after every valid one, ties broken by event_id
+    (us_a, dt_a), (us_b, dt_b) = (
+        chunk_pair([5, 4], [base, base], [True, False]),
+        chunk_pair([9, 1], [base, base - 1], [False, True]),
+    )
+    got, _ = _cumcount_batch([us_b, us_a], 0, 7)
+    assert got["event_id"].tolist() == [4, 9, 1, 5]
+    pd.testing.assert_frame_equal(got, _cumcount_reference([dt_b, dt_a], 0, 7)[0])
+
+    got, got_n = _cumcount_batch([], 3, 7)
+    want, want_n = _cumcount_reference([], 3, 7)
+    assert got_n == want_n == 3
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_index_type=False)
+
+
 def test_run_available_now_start_failure_restores_session(spark):
     """A start-time failure (invalid output mode) must still restore
     the progress-cap conf and remove the checkpoint dir — the leak
@@ -760,8 +841,11 @@ def test_state_partitions_scope_interleaved_exit_no_strand(spark):
 
 
 def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
-    """run_available_now's deliberate 8-store default (round 11) must
-    be OUTPUT-invariant vs inheriting the session's batch default:
+    """run_available_now's deliberate default of one state store per
+    task slot, ``min(8, defaultParallelism)``, must be what a default
+    drain latches (its progress reports that many shuffle partitions
+    per state operator), and it must be OUTPUT-invariant vs an
+    explicit 8 stores and vs inheriting the session's batch default:
     state is hash-distributed over stores, so the windowed aggregate
     — including watermark drop behavior across micro-batches — is the
     same at any store count.  Also pins that the default scope
@@ -777,11 +861,13 @@ def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
     ]
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
+    slots = min(8, spark.sparkContext.defaultParallelism)
     outs = []
-    for name, sp in (("dsp_a", 8), ("dsp_b", None)):
+    for name, sp in (("dsp_default", {}), ("dsp_a", {"state_partitions": 8}),
+                     ("dsp_b", {"state_partitions": None})):
         (tmp_path / name).mkdir()
         src = _write_batches(str(tmp_path / name), batches)
-        run_available_now(
+        progress = run_available_now(
             watermarked_tumbling(
                 read_parquet_stream(spark, src),
                 watermark="10 minutes",
@@ -789,8 +875,15 @@ def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
             ),
             name,
             output_mode="append",
-            state_partitions=sp,
+            **sp,
         )
+        if not sp:
+            stores = {
+                so["numShufflePartitions"]
+                for p in progress
+                for so in p.get("stateOperators", [])
+            }
+            assert stores == {slots}
         outs.append(
             sorted(
                 (str(r.bucket_start), r.event_type, r.n)
@@ -798,7 +891,36 @@ def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
             )
         )
         assert spark.conf.get(key) == prior
-    assert outs[0] == outs[1] and outs[0]
+    assert outs[0] == outs[1] == outs[2] and outs[0]
+
+
+@pytest.mark.parametrize("slots,stores", [(1, 1), (4, 4), (8, 8), (32, 8)])
+def test_drain_default_state_store_count_is_slot_sized(monkeypatch, slots, stores):
+    """The default store count is one per task slot, capped at 8, and
+    an explicit int still wins.  Spark-free: the test session's
+    parallelism is fixed, so the slot count is faked and the scope
+    records the count a drain would latch."""
+    from types import SimpleNamespace
+
+    from data_ingest_utils_spark.streaming import runner
+
+    latched = []
+    monkeypatch.setattr(
+        runner, "state_partitions_scope",
+        lambda spark, n: latched.append(n) or contextlib.nullcontext(),
+    )
+    monkeypatch.setattr(
+        runner, "drain_available_now",
+        lambda df, configure, **kw: SimpleNamespace(recentProgress=[]),
+    )
+    session = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=slots)
+    )
+    df = SimpleNamespace(sparkSession=session)
+    runner.run_available_now(df, "unused")
+    runner.run_available_now(df, "unused", state_partitions=16)
+    runner.run_available_now(df, "unused", state_partitions=None)
+    assert latched == [stores, 16]
 
 
 def _batch_interval_join_twin(spark):
@@ -827,9 +949,9 @@ def _batch_interval_join_twin(spark):
 
 
 def test_stream_stream_join_matches_batch_twin(spark):
-    """The registry key's (8-store) streamed drain must equal the
-    batch interval join as a MULTISET — a Counter compare, so a
-    duplicate-emitting streaming bug can't hide behind set identity."""
+    """The registry key's streamed drain (slot-sized store count) must
+    equal the batch interval join as a MULTISET — a Counter compare, so
+    a duplicate-emitting streaming bug can't hide behind set identity."""
     from collections import Counter
 
     from data_ingest_utils_spark.plans import QUERIES
@@ -854,10 +976,7 @@ def test_stream_stream_join_store_count_invariant(spark):
 
     from data_ingest_utils_spark.plans.scans import SCRATCH
     from data_ingest_utils_spark.sources.readers import load_table
-    from data_ingest_utils_spark.streaming.runner import (
-        run_available_now,
-        state_partitions_scope,
-    )
+    from data_ingest_utils_spark.streaming.runner import run_available_now
 
     def drain(n_stores):
         run_id = uuid.uuid4().hex[:12]
@@ -898,10 +1017,11 @@ def test_stream_stream_join_store_count_invariant(spark):
             & (F.col("v_ts") <= F.col("p_ts")),
         )
         try:
-            with state_partitions_scope(spark, n_stores):
-                run_available_now(
-                    j.select("purchase_id", "view_id", "user_id"), sink
-                )
+            run_available_now(
+                j.select("purchase_id", "view_id", "user_id"),
+                sink,
+                state_partitions=n_stores,
+            )
             return Counter(tuple(r) for r in spark.table(sink).collect())
         finally:
             spark.catalog.dropTempView(sink)
