@@ -24,7 +24,7 @@ from data_ingest_utils_spark.operators.relational import (
     topk_per_group,
 )
 from data_ingest_utils_spark.plans.registry import plan
-from data_ingest_utils_spark.sources.readers import load_table
+from data_ingest_utils_spark.sources.readers import load_table, table_fingerprint
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
 # Derived from the single source the Spark side uses — editing
@@ -59,7 +59,7 @@ def _fixture_cache_path(sf_dir: str, table: str, name: str) -> str:
     table (full path + per-file size/mtime), so a regenerated source
     — even at equal cardinality — addresses a different cache entry
     and forces a rebuild (ADVICE r11's staleness class)."""
-    from data_ingest_utils_spark.plans.scans import SCRATCH, table_fingerprint
+    from data_ingest_utils_spark.plans.scans import SCRATCH
 
     return f"{SCRATCH}/{name}_{table_fingerprint(sf_dir, table)}"
 

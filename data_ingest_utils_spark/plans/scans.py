@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from data_ingest_utils_spark.plans.money import money_sum, money_sum_sql
 from data_ingest_utils_spark.plans.registry import plan
-from data_ingest_utils_spark.sources.readers import load_table, read_csv, read_jsonl
+from data_ingest_utils_spark.sources.readers import (
+    load_table,
+    read_csv,
+    read_jsonl,
+    table_fingerprint,
+)
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
 #: Scratch space for sink/read-back round trips (NOT the read-only
@@ -294,34 +299,6 @@ def sink_bucketed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(F.count("*").alias("n"), F.round(F.sum("l_quantity"), 6).alias("sum_qty"))
     )
-
-
-def table_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of one fixture table's file inventory —
-    sha256 over the absolute root plus every file's (relpath, size,
-    mtime_ns), handling both single-file tables (testdata dirs) and
-    part-file directories (tools/make_scale_data.py trees).
-
-    This is the staleness key for every derived-fixture cache
-    (bucketed tables below, the PQ codebook / MinHash band-index
-    caches in plans/llm.py): a REGENERATED source at the same path
-    changes mtimes, so equal-cardinality rewrites — which a row-count
-    check cannot see (ADVICE r11) — change the digest and force a
-    rebuild.  Metadata-only: no file contents are read and no Spark
-    job runs."""
-    root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    h = hashlib.sha256(root.encode())
-    if os.path.isdir(root):
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            for fn in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, fn))
-                rel = os.path.relpath(os.path.join(dirpath, fn), root)
-                h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}".encode())
-    elif os.path.exists(root):
-        st = os.stat(root)
-        h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
 
 
 def _ensure_bucketed_fixture(

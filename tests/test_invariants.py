@@ -2644,3 +2644,67 @@ def test_knn_join_gemm_matches_join_path(spark):
         sim.knn_join_blocked(base, k=10_000).orderBy("vec_id", "rnk").collect()
     )
     assert [tuple(r) for r in gbig] == [tuple(r) for r in jbig]
+
+
+def _jobs_launched(spark, group: str, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    number of Spark jobs the group launched (listener bus drained, so
+    the status tracker has seen every job start)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once(spark):
+    """A repeat load of an unchanged table launches no Spark job (the
+    footer-reading inference job runs once per file version) and
+    returns the schema a fresh inferred read gives."""
+    from data_ingest_utils_spark.sources import readers
+
+    for t in readers.TABLES:
+        readers._SCHEMAS.clear()
+        first, n_first = _jobs_launched(
+            spark, f"schema-cache-{t}-cold", lambda: readers.load_table(spark, SF_T2, t)
+        )
+        again, n_again = _jobs_launched(
+            spark, f"schema-cache-{t}-warm", lambda: readers.load_table(spark, SF_T2, t)
+        )
+        assert n_first == 1, t
+        assert n_again == 0, t
+        assert again.schema == first.schema, t
+        fresh = spark.read.parquet(f"{SF_T2}/{t}.parquet").schema
+        assert list(readers._SCHEMAS.values()) == [fresh], t
+
+
+def test_load_table_schema_cache_key_staleness_and_confs(spark, tmp_path):
+    """The schema-cache key sees a rewritten file and the session's
+    parquet inference confs: a stale cached schema must never win."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingest_utils_spark.sources.readers import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    load_table(spark, SF_T2, "orders")
+    try:
+        spark.conf.set(conf, "false")
+        got = load_table(spark, SF_T2, "orders").schema["o_orderdate"].dataType
+        fresh = spark.read.parquet(f"{SF_T2}/orders.parquet").schema["o_orderdate"]
+        assert got == fresh.dataType
+        assert got.typeName() == "timestamp"
+    finally:
+        spark.conf.set(conf, prev)

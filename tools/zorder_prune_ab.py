@@ -129,9 +129,9 @@ def main() -> int:
         _promote_cache_build,
         _write_cache_manifest,
         load_table,
-        table_fingerprint,
     )
     from data_ingest_utils_spark.session import get_session
+    from data_ingest_utils_spark.sources.readers import table_fingerprint
 
     spark = get_session("dius-zorder-ab")
     sf_dir = os.path.join(repo, args.sf) if not os.path.isabs(args.sf) else args.sf
